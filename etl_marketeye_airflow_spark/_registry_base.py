@@ -442,9 +442,11 @@ def _spread_heavy_scan(
         sz = _os.path.getsize(_os.path.join(sf_dir, f"{table}.parquet"))
     except OSError:
         sz = 0
-    min_bytes = int(
-        _os.environ.get("SPARK_GRAFT_SPREAD_MIN_MB", "32")
-    ) << 20
+    try:
+        min_mb = int(_os.environ.get("SPARK_GRAFT_SPREAD_MIN_MB", "32"))
+    except ValueError:  # a malformed override falls back to the default
+        min_mb = 32
+    min_bytes = min_mb << 20
     if sz // max(1, n_parts) > min_bytes:
         return df.repartition(par)
     return df

@@ -7,20 +7,23 @@ from pyspark.sql import functions as F
 
 from ..schemas import MASTER_SCHEMA, OFFER_SCHEMA
 
-# Offer fields in schema order; adapters supply a dict of the ones they
-# have and the rest become typed nulls.
-_OFFER_FIELDS = [f.name for f in OFFER_SCHEMA.fields]
+# SQL type strings of the offer struct and the master columns, in schema
+# order: a cast to a type string is one JVM call, where a DataType
+# argument pays a session lookup and a JSON round trip per cast.
+_OFFER_TYPE = OFFER_SCHEMA.simpleString()
+_MASTER_CASTS = [
+    f"CAST({f.name} AS {f.dataType.simpleString()}) AS {f.name}" for f in MASTER_SCHEMA.fields
+]
 
 
 def build_offer(**fields: Column) -> Column:
-    """Assemble one offer struct with nulls for absent per-source fields."""
-    cols = []
-    for f in OFFER_SCHEMA.fields:
-        c = fields.get(f.name)
-        if c is None:
-            c = F.lit(None).cast(f.dataType)
-        cols.append(c.cast(f.dataType).alias(f.name))
-    return F.struct(*cols)
+    """Assemble one offer struct with nulls for absent per-source fields
+    (adapters supply the fields they have).  The struct is cast as a
+    whole: a struct cast matches fields by position and takes the names
+    from the offer type."""
+    return F.struct(
+        *[fields[f.name] if f.name in fields else F.lit(None) for f in OFFER_SCHEMA.fields]
+    ).cast(_OFFER_TYPE)
 
 
 def build_metadata(source: str, scraped_at: Column | None = None) -> Column:
@@ -49,5 +52,4 @@ def finalize_master(df: DataFrame) -> DataFrame:
     ~30× plan blowup).  External master-doc ingestion must filter null
     ids at its own scan, where the predicate is a cheap column ref.
     """
-    cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in MASTER_SCHEMA.fields]
-    return df.select(*cols)
+    return df.selectExpr(*_MASTER_CASTS)

@@ -19,21 +19,14 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..config import BRAND_MAPPING, TITLE_BRAND_MAPPING
-
-
-def _first_match(lowered: Column, mapping) -> Column:
-    """Ordered substring scan: first mapping key contained in `lowered` wins."""
-    expr = F.lit(None).cast("string")
-    # Build the when-chain in order; coalesce keeps the FIRST non-null.
-    conds = [F.when(lowered.contains(k), F.lit(v)) for k, v in mapping]
-    return F.coalesce(*conds, expr) if conds else expr
+from .lookup import first_match
 
 
 def normalize_brand(brand: Column, mapping=BRAND_MAPPING) -> Column:
     """F4: canonical brand from a brand-ish field; fallback initcap; null → Unknown."""
     s = F.trim(brand.cast("string"))
     lowered = F.lower(s)
-    mapped = _first_match(lowered, mapping)
+    mapped = first_match(lowered, mapping)
     return (
         F.when(s.isNull() | (s == ""), "Unknown")
         .otherwise(F.coalesce(mapped, F.initcap(lowered)))
@@ -46,7 +39,7 @@ def brand_from_text(text: Column, mapping=TITLE_BRAND_MAPPING) -> Column:
     Returns null when nothing matches (callers coalesce the fallback
     chain), unlike normalize_brand which always yields a value.
     """
-    return _first_match(F.lower(F.coalesce(text.cast("string"), F.lit(""))), mapping)
+    return first_match(F.lower(F.coalesce(text.cast("string"), F.lit(""))), mapping)
 
 
 def extract_brand(

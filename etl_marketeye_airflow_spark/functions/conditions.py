@@ -13,12 +13,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..config import CONDITION_MAPPING
+from .lookup import first_match
 
 
 def determine_condition(condition: Column, default: str = "used") -> Column:
     s = F.trim(condition.cast("string"))
     missing = s.isNull() | F.upper(s).isin("", "NULL", "NONE")
-    lowered = F.lower(s)
-    conds = [F.when(lowered.contains(k), F.lit(v)) for k, v in CONDITION_MAPPING]
-    mapped = F.coalesce(*conds, F.lit(default))
+    mapped = F.coalesce(first_match(F.lower(s), CONDITION_MAPPING), F.lit(default))
     return F.when(missing, default).otherwise(mapped)

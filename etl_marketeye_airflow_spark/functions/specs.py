@@ -24,6 +24,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..config import ELECTROPLANET_SPEC_MAPPING
+from .lookup import _sql_str
 
 
 def _clean_entry(v: Column) -> Column:
@@ -32,12 +33,24 @@ def _clean_entry(v: Column) -> Column:
     return F.when(s.isNull() | F.upper(s).isin("", "NULL", "NONE"), F.lit(None)).otherwise(s)
 
 
+def _key_array(keys) -> Column:
+    """``array<string>`` literal of ``keys``, built in a single call."""
+    return F.expr("array(" + ", ".join(_sql_str(k) for k in keys) + ")")
+
+
 def map_from_pairs(*pairs: tuple[str, Column]) -> Column:
-    """Build map<string,string> from (key, value-expr), dropping null values."""
-    entries = F.array(
-        *[F.struct(F.lit(k).alias("key"), _clean_entry(v).alias("value")) for k, v in pairs]
+    """Build map<string,string> from (key, value-expr), dropping null values.
+
+    Each value expression appears once in the plan: the entries are
+    cleaned inside one ``transform_values``, where the value is a bound
+    lambda variable, instead of inlining it into every branch of the
+    clean-up.
+    """
+    values = F.map_from_arrays(
+        _key_array(k for k, _ in pairs), F.array(*[v.cast("string") for _, v in pairs])
     )
-    return F.map_from_entries(F.filter(entries, lambda e: e.getField("value").isNotNull()))
+    cleaned = F.transform_values(values, lambda _, v: _clean_entry(v))
+    return F.map_filter(cleaned, lambda _, v: v.isNotNull())
 
 
 def avito_specs(

@@ -2,9 +2,23 @@
 
 The reference's five Airflow tasks materialize JSON between every stage;
 here the whole ETL is ONE lazy plan: read 3 sources → project → union →
-merge-groupBy → cache → fan out to stats/report/sinks.  The merged DF is
-persisted once and reused by every consumer (the reference re-reads the
-file per sink — SURVEY §4 'redundant recomputation').
+merge-groupBy → cache → fan out to stats/report/sinks.  What is computed
+once, and why:
+
+- the merged DF is persisted once and reused by every consumer (the
+  reference re-reads the file per sink — SURVEY §4 'redundant
+  recomputation');
+- each summary is one aggregate: ``dataset_statistics`` reads the flat
+  offers once, and the brand table is sorted in one partition (it is
+  bounded by the brand count);
+- the anomaly fan-out computes the per-product market aggregate (exact
+  median and percentiles, the dearest part of the pass) once and the
+  flagged offers once, each ``localCheckpoint(eager=False)``: the stats
+  table, the flags, the top-N and the type counts read those rows
+  instead of re-running the aggregate per consumer.  Nothing unpersists
+  those blocks; they stay until Spark's ContextCleaner collects the
+  frames, which is acceptable because each Airflow task runs in its own
+  fresh session and both frames are small.
 """
 
 from __future__ import annotations
@@ -50,7 +64,7 @@ def run_etl(spark: SparkSession, raw_dir: str, persist: bool = True) -> EtlResul
     return EtlResult(
         merged=merged,
         offers_flat=offers,
-        statistics=stats_ops.dataset_statistics(merged, offers),
+        statistics=stats_ops.dataset_statistics(offers),
         brand_distribution=stats_ops.brand_distribution(merged),
         source_counts=stats_ops.offers_per_source(offers),
         condition_distribution=stats_ops.condition_distribution(offers),
@@ -60,9 +74,12 @@ def run_etl(spark: SparkSession, raw_dir: str, persist: bool = True) -> EtlResul
 def run_anomaly_analysis(
     offers_flat: DataFrame, strategy: str = "zscore", top_n: int = 10, **kwargs
 ) -> dict[str, DataFrame]:
-    anomalies = anomaly_ops.flag_anomalies(offers_flat, strategy=strategy, **kwargs)
+    stats = anomaly_ops.market_stats(offers_flat).localCheckpoint(eager=False)
+    anomalies = anomaly_ops.flag_anomalies(
+        offers_flat, stats, strategy=strategy, **kwargs
+    ).localCheckpoint(eager=False)
     return {
-        "group_stats": anomaly_ops.group_market_stats(offers_flat),
+        "group_stats": anomaly_ops.group_market_stats(stats),
         "anomalies": anomalies,
         "top_anomalies": anomaly_ops.top_anomalies(anomalies, top_n),
         "type_distribution": anomaly_ops.anomaly_type_distribution(anomalies),

@@ -648,7 +648,6 @@ def strip_frequent_grams(
     text_col: str = "text",
     k: int = 2,
     max_doc_permille: int = 80,
-    persist_grams: bool = False,
 ) -> DataFrame:
     """C4-style boilerplate stripping, gram-level: any word ``k``-gram
     present in more than ``max_doc_permille``/1000 of documents is
@@ -688,18 +687,9 @@ def strip_frequent_grams(
         .filter(F.size(F.split(F.col("_g"), " ")) == k)
         .select("doc_id", "_pos", "_g")
     )
-    if persist_grams:
-        # ``grams`` fans out into the document-frequency branch AND the
-        # removal join — each evaluation re-pays the token-stream
-        # exchange + per-doc sort behind the lead() window.  Persisting
-        # trades one corpus-scale MEMORY_AND_DISK cache (spills, never
-        # OOMs — guide §5) for the second window evaluation.  Opt-in:
-        # the r13 skew-seed A/B (probes/r13_strip_persist_ab.json)
-        # decides the caller default; lifecycle is the caller's
-        # (gate/bench clearCache between queries).
-        from pyspark.storagelevel import StorageLevel
-
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
+    # ``grams`` feeds both the df branch and the removal join; persisting
+    # it was measured and lost on normal and skew data
+    # (probes/r13_strip_persist_ab.json), so it is recomputed.
     df_tbl = (
         grams.select("doc_id", "_g")
         .distinct()

@@ -12,19 +12,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def dataset_statistics(merged: DataFrame, offers_flat: DataFrame) -> DataFrame:
-    """A1/A2: single-row global stats (total products/offers, price agg, sources)."""
-    totals = merged.agg(
-        F.count(F.lit(1)).alias("total_products"),
-        F.sum(F.size("offers")).alias("total_offers"),
+def dataset_statistics(offers_flat: DataFrame) -> DataFrame:
+    """A1/A2: single-row global stats (total products/offers, price agg,
+    sources) from ONE aggregate over the flat offers.
+
+    Every merged product has at least one offer, so its products are
+    the distinct offer product ids; ``total_offers`` is a sum of ones,
+    NULL on empty input like the per-product offer-count sum it
+    replaces.  The flat offers come from the merged frame, which is
+    already hash-partitioned on product_id, so the distinct count adds
+    no shuffle."""
+    price = F.col("price")
+    positive = F.when(price > 0, price)
+    return offers_flat.agg(
+        F.count_distinct("product_id").alias("total_products"),
+        F.sum(F.lit(1)).alias("total_offers"),
+        F.avg(positive).alias("avg_price"),
+        F.min(positive).alias("min_price"),
+        F.max(positive).alias("max_price"),
+        F.array_sort(F.collect_set("source")).alias("sources"),
     )
-    prices = offers_flat.filter(F.col("price") > 0).agg(
-        F.avg("price").alias("avg_price"),
-        F.min("price").alias("min_price"),
-        F.max("price").alias("max_price"),
-    )
-    sources = offers_flat.agg(F.array_sort(F.collect_set("source")).alias("sources"))
-    return totals.crossJoin(prices).crossJoin(sources)
 
 
 def approx_market_stats(
@@ -69,7 +76,8 @@ def brand_distribution(merged: DataFrame) -> DataFrame:
     return (
         merged.groupBy("brand")
         .agg(F.count(F.lit(1)).alias("n_products"))
-        .orderBy(F.desc("n_products"), "brand")
+        .coalesce(1)  # bounded by the brand count: no range shuffle
+        .sortWithinPartitions(F.desc("n_products"), "brand")
     )
 
 

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_marketeye_airflow_spark.functions import (
+    brand_from_text,
     build_avito_url,
     clean_model_name,
     clean_price,
@@ -98,6 +99,18 @@ def test_extract_brand_fallback_chain(spark):
         "brand string, title string, model string",
     )
     assert out == [e for *_, e in EXTRACT_BRAND_CASES]
+
+
+def test_first_match_follows_table_order_not_text_order(spark):
+    """The lookup returns the FIRST table entry contained in the text:
+    'galaxy' precedes 'pixel' in TITLE_BRAND_MAPPING, so a title naming
+    both is Samsung even when 'pixel' comes first in the text."""
+    rows = [("Pixel 7 vs Galaxy S23",), ("galaxy et pixel",), ("pixel 8",)]
+    out = eval_expr(spark, lambda df: brand_from_text(df.title), rows, "title string")
+    assert out == ["Samsung", "Samsung", "Google"]
+    # longest-key-first condition table: 'comme neuf' wins over 'neuf'
+    out = eval_expr(spark, lambda df: determine_condition(df.c), [("Comme neuf",)], "c string")
+    assert out == ["like new"]
 
 
 # --- F9 condition ---------------------------------------------------------

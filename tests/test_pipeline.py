@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_marketeye_airflow_spark.jobs import run_anomaly_analysis, run_etl
-from etl_marketeye_airflow_spark.operators.anomaly import flag_anomalies
+from etl_marketeye_airflow_spark.operators.anomaly import flag_anomalies, market_stats
 from etl_marketeye_airflow_spark.operators.stats import multi_source_products
 
 FIXTURES = str(Path(__file__).parent / "fixtures")
@@ -104,6 +104,46 @@ def test_determinism_rerun(spark, etl):
         assert a[pid].specifications == b[pid].specifications
 
 
+def _jobs_in_group(spark, group, action):
+    """Spark jobs one action runs, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_summaries_are_one_aggregate_each(spark, etl):
+    """dataset_statistics is one aggregate over the flat offers (a map
+    stage and a result stage), and the anomaly type counts one
+    conditional-count aggregate over the checkpointed flags."""
+    assert _jobs_in_group(spark, "t-statistics", etl.statistics.collect) <= 2
+    res = run_anomaly_analysis(etl.offers_flat, strategy="zscore", z_threshold=0.5)
+    assert _jobs_in_group(spark, "t-type-dist", res["type_distribution"].collect) <= 2
+
+
+def test_anomaly_consumers_read_the_checkpoint(etl):
+    """top_anomalies and type_distribution read the flagged frame's
+    checkpoint: neither plan re-runs the exact median or percentiles."""
+    import re
+
+    res = run_anomaly_analysis(etl.offers_flat)
+    for key in ("top_anomalies", "type_distribution"):
+        plan = res[key]._jdf.queryExecution().executedPlan().toString()
+        assert not re.search(r"(?<!\w)(median|percentile)\(", plan), (key, plan)
+
+
+def test_dataset_statistics_on_empty_input(etl):
+    from etl_marketeye_airflow_spark.operators.stats import dataset_statistics
+
+    row = dataset_statistics(etl.offers_flat.filter(F.lit(False))).collect()[0]
+    assert row.total_products == 0
+    assert row.total_offers is None
+    assert row.avg_price is None and row.sources == []
+
+
 # --- anomaly strategies (hand-computed expectations) ------------------------
 
 
@@ -121,7 +161,9 @@ def offers_anomaly(spark):
 
 
 def test_zscore_strategy(offers_anomaly):
-    out = flag_anomalies(offers_anomaly, strategy="zscore", z_threshold=2.0).collect()
+    out = flag_anomalies(
+        offers_anomaly, market_stats(offers_anomaly), strategy="zscore", z_threshold=2.0
+    ).collect()
     assert len(out) == 1
     a = out[0]
     assert a.anomaly_price == 2000.0
@@ -134,7 +176,9 @@ def test_zscore_strategy(offers_anomaly):
 
 
 def test_iqr_strategy(offers_anomaly):
-    out = flag_anomalies(offers_anomaly, strategy="iqr", iqr_k=1.5).collect()
+    out = flag_anomalies(
+        offers_anomaly, market_stats(offers_anomaly), strategy="iqr", iqr_k=1.5
+    ).collect()
     assert [r.anomaly_price for r in out] == [2000.0]
 
 
@@ -150,12 +194,9 @@ def test_anomaly_reports(offers_anomaly):
 
 
 def test_anomaly_report_rendering(spark, offers_anomaly):
-    from etl_marketeye_airflow_spark.operators.anomaly import (
-        flag_anomalies,
-        render_anomaly_report,
-    )
+    from etl_marketeye_airflow_spark.operators.anomaly import render_anomaly_report
 
-    anomalies = flag_anomalies(offers_anomaly, strategy="iqr")
+    anomalies = flag_anomalies(offers_anomaly, market_stats(offers_anomaly), strategy="iqr")
     report = render_anomaly_report(1, anomalies, top_n=5, ts="2026-08-13")
     assert "Total anomalies: 1" in report
     assert "TROP_HAUT: 1 (100.0%)" in report

@@ -109,3 +109,12 @@ def test_only_boundary_partitions_sorted(spark):
     for k, b in enumerate(bnds, start=1):
         rb = -(-(k * n) // 4) + 1
         assert tuple(b) == ranked[rb - 1]
+
+
+def test_reserved_internal_names_raise(spark):
+    """A caller column named like an internal one (_pid, _lrn) would be
+    overwritten by the partition-id / local-rank columns; the operator
+    refuses it, as global_rank_cumsum does."""
+    df = spark.createDataFrame([(1, 1, 0)], "value long, key long, _pid int")
+    with pytest.raises(ValueError, match="_pid"):
+        rank_quantile_boundaries(df, "value", "key")

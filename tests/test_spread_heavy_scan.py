@@ -54,3 +54,14 @@ def test_missing_file_is_noop(spark, tmp_path):
     df = spark.range(10).coalesce(1)
     out = _spread_heavy_scan(df, str(tmp_path), "documents")
     assert out is df
+
+
+def test_malformed_min_mb_falls_back_to_default(tmp_path, spark, monkeypatch):
+    """A SPARK_GRAFT_SPREAD_MIN_MB that does not parse falls back to the
+    32 MB default instead of raising inside every pair query."""
+    p = str(tmp_path / "sf" / "documents.parquet")
+    _write_docs(spark, p, 50)
+    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MIN_MB", "32MB")
+    df = spark.read.parquet(p).coalesce(1)
+    # tiny file under the default floor: a no-op, as without the override
+    assert _spread_heavy_scan(df, str(tmp_path / "sf"), "documents") is df

@@ -555,3 +555,29 @@ def test_bench_value_norm_model():
     assert 75 < got < 85
     assert bench.value_norm(100.0, 10.0) > bench.value_norm(100.0, 20.0)
     assert bench.value_norm(100.0, 20.0) < 100.0
+
+
+def test_capture_plans_counts_broadcast_apart():
+    """capture_plans prints shuffle, reused and broadcast exchanges as
+    separate fields, each from its own formatted-plan node header."""
+    from capture_plans import plan_counts
+
+    plan = """== Physical Plan ==
+AdaptiveSparkPlan (9)
++- HashAggregate (8)
+   +- Exchange (7)
+      +- BroadcastHashJoin Inner BuildRight (6)
+         :- Exchange (2)
+         :  +- Scan parquet  (1)
+         +- BroadcastExchange (5)
+            +- ReusedExchange (4)
+
+(1) Scan parquet
+(2) Exchange
+Arguments: hashpartitioning(k#1, 8)
+(4) ReusedExchange [Reuses operator id: 2]
+(5) BroadcastExchange
+(6) BroadcastHashJoin
+(7) Exchange
+"""
+    assert plan_counts(plan) == "exchanges=2 reused=1 broadcast=1"

@@ -41,6 +41,15 @@ def count_exchanges(plan: str) -> int:
     return len(re.findall(r"\(\d+\) Exchange\b", plan))
 
 
+def plan_counts(plan: str) -> str:
+    """The summary fields printed per plan: shuffle exchanges, reused
+    exchanges and broadcast exchanges, each counted from its own
+    '(n) <Node>' header so no node type folds into another."""
+    n_reused = len(re.findall(r"\(\d+\) ReusedExchange\b", plan))
+    n_broadcast = len(re.findall(r"\(\d+\) BroadcastExchange\b", plan))
+    return f"exchanges={count_exchanges(plan)} reused={n_reused} broadcast={n_broadcast}"
+
+
 def main() -> None:
     outdir = Path(sys.argv[1])
     suffix = sys.argv[2]
@@ -56,9 +65,7 @@ def main() -> None:
         plan = formatted_plan(df)
         path = outdir / f"{name}_{suffix}.txt"
         path.write_text(plan)
-        n_ex = count_exchanges(plan)
-        n_reused = len(re.findall(r"\(\d+\) ReusedExchange\b", plan))
-        print(f"{path}  exchanges={n_ex} reused={n_reused}", flush=True)
+        print(f"{path}  {plan_counts(plan)}", flush=True)
 
 
 if __name__ == "__main__":
