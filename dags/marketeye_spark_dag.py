@@ -1,7 +1,7 @@
 """Thin Airflow DAG wrapping the Spark jobs (SURVEY.md §2.12, O1-O3).
 
 Topology mirrors the reference DAG (dags/marketeye_etl_dag.py:1016-1090):
-start → extract+merge (ONE Spark job — the 3-source fan-in is lazy plan
+start → extract+merge (ONE task — the 3-source fan-in is lazy plan
 evaluation, not task orchestration) → stats → report → [jdbc ∥ mongo ∥
 backup] → end, @daily, catchup=False, retries=1/5min, 1 h timeout.
 
@@ -42,10 +42,13 @@ def _session():
 
 
 def task_etl(**_):
-    """extract+merge+stats as ONE Spark job; materializes the final
-    nested JSON + flat offers CSV the downstream sink tasks read — the
-    reference's file-handoff contract (dags/marketeye_etl_dag.py:726-728)
-    with the per-stage re-reads collapsed into one cached plan."""
+    """extract+merge+stats as ONE task: the three reads, adapters and the
+    merge are one lazy plan, checkpointed once by ``run_etl``; the JSON
+    sink, the CSV sink and the statistics collect then run as separate
+    Spark jobs over those rows.  Materializes the final nested JSON +
+    flat offers CSV the downstream sink tasks read — the reference's
+    file-handoff contract (dags/marketeye_etl_dag.py:726-728) with the
+    per-stage re-reads collapsed into one checkpoint."""
     from etl_marketeye_airflow_spark.jobs import run_etl
     from etl_marketeye_airflow_spark.sinks import write_csv_offers, write_json_products
 

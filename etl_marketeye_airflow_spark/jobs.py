@@ -2,12 +2,20 @@
 
 The reference's five Airflow tasks materialize JSON between every stage;
 here the whole ETL is ONE lazy plan: read 3 sources → project → union →
-merge-groupBy → cache → fan out to stats/report/sinks.  What is computed
-once, and why:
+merge-groupBy → checkpoint → fan out to stats/report/sinks.  What is
+computed once, and why:
 
-- the merged DF is persisted once and reused by every consumer (the
+- the merged DF is computed once and reused by every consumer (the
   reference re-reads the file per sink — SURVEY §4 'redundant
-  recomputation');
+  recomputation').  It is a ``localCheckpoint(eager=False)``, not a
+  ``persist()``: the daily pass's eleven actions on it (summaries, anomaly
+  frames, sinks) then read plain rows instead of decoding a columnar
+  cache of nested arrays, structs and maps.  Under AQE the call runs
+  the merge's shuffle map stage at once, so that work moves from the
+  first summary into ``run_etl``.  The trade: the checkpoint truncates
+  lineage, so a lost executor fails the task instead of recomputing
+  the partition, and the DAG's ``retries: 1`` re-runs the task in a
+  fresh session (as for the anomaly checkpoints below);
 - each summary is one aggregate: ``dataset_statistics`` reads the flat
   offers once, and the brand table is sorted in one partition (it is
   bounded by the brand count);
@@ -59,7 +67,7 @@ def extract_all(spark: SparkSession, raw_dir: str) -> DataFrame:
 def run_etl(spark: SparkSession, raw_dir: str, persist: bool = True) -> EtlResult:
     merged = merge_products(extract_all(spark, raw_dir))
     if persist:
-        merged = merged.persist()
+        merged = merged.localCheckpoint(eager=False)
     offers = flatten_offers(merged)
     return EtlResult(
         merged=merged,

@@ -14,12 +14,15 @@ Engine decisions (SURVEY §2.13/§7.3):
   (source,url) per product, the plugin dedups (source,price,url)
   GLOBALLY (a bug); we take the per-product superset key.
 - "first-seen" is arrival-order-dependent in the reference.  The engine
-  defines a deterministic arrival order: (source_rank, scraped_at, url)
-  with Avito < Jumia < Electroplanet matching the reference's source
-  processing order (dags:627).  Same-input runs give identical output
-  regardless of partitioning.
+  defines a deterministic arrival order: (source_rank, scraped_at, url,
+  price) with Avito < Jumia < Electroplanet matching the reference's
+  source processing order (dags:627).  Of two copies of one offer (same
+  dedup key) the earlier arrival is kept; copies that tie there are
+  ordered by all their other fields.  Same-input runs give identical
+  output regardless of union order or partitioning.
 
-Scale notes: one shuffle on product_id (hash agg).  Offer-count skew
+Scale notes: one shuffle, a hash repartition on product_id that both
+the dedup and the product aggregate reuse.  Offer-count skew
 (one product held 995/25,558 offers in the reference run) is handled by
 AQE;  the per-group collect_list is bounded by group size — at 100 TB
 with pathological groups, cap offers per product upstream or switch the
@@ -68,6 +71,11 @@ def merge_products(products: DataFrame) -> DataFrame:
     p = products.withColumn("product_id", normalize_product_id(F.col("product_id")))
 
     # Explode to offer granularity; keep product-level fields alongside.
+    # posexplode_outer + `pos IS NOT NULL` keeps exactly explode's rows
+    # (NULL/empty arrays give a NULL pos; NULL elements keep theirs) but,
+    # unlike an inner explode, gets no inferred `size(offers) > 0` filter
+    # for the optimizer to push through every adapter projection, where
+    # it would re-run each offer expression per row (CLAUDE.md conv 2b).
     o = p.select(
         "product_id",
         "brand",
@@ -76,37 +84,41 @@ def merge_products(products: DataFrame) -> DataFrame:
         "category",
         "specifications",
         F.col("metadata.sources").alias("doc_sources"),
-        F.explode("offers").alias("offer"),
-    )
+        F.posexplode_outer("offers").alias("pos", "offer"),
+    ).filter(F.col("pos").isNotNull())
 
     # Deterministic arrival order (see module docstring).
-    arrival = F.struct(
-        _source_rank(F.col("offer.source")).alias("rank"),
-        F.col("offer.scraped_at").alias("scraped_at"),
-        F.col("offer.url").alias("url"),
+    o = o.withColumn(
+        "arrival",
+        F.struct(
+            _source_rank(F.col("offer.source")).alias("rank"),
+            F.col("offer.scraped_at").alias("scraped_at"),
+            F.col("offer.url").alias("url"),
+            F.col("offer.price").alias("price"),
+        ),
     )
-    o = o.withColumn("arrival", arrival)
 
-    # A6: per-product offer dedup on (source, url, price).  dropDuplicates
-    # needs top-level columns; project the key out first.
+    # The one shuffle: hash on product_id satisfies the clustering of both
+    # the dedup and the product aggregate, so neither adds an Exchange.
+    # A6: per-product offer dedup on (source, url, price) keeps the
+    # earliest-arrival copy; copies that tie on arrival are ordered by
+    # every other field (the spec map by its sorted entries), so the kept
+    # copy never depends on shuffle-arrival order.
+    payload = ["arrival", "offer", "brand", "model", "product_name", "category", "doc_sources"]
+    copy_order = F.struct(
+        *payload, F.array_sort(F.map_entries("specifications")).alias("spec_entries")
+    )
     o = (
-        o.withColumns(
-            {
-                "_src": F.col("offer.source"),
-                "_url": F.col("offer.url"),
-                "_price": F.col("offer.price"),
-            }
-        )
-        .dropDuplicates(["product_id", "_src", "_url", "_price"])
-        .drop("_src", "_url", "_price")
+        o.repartition("product_id")
+        .groupBy("product_id", "offer.source", "offer.url", "offer.price")
+        .agg(F.min_by(F.struct(*payload, "specifications"), copy_order).alias("c"))
+        .select("product_id", "c.*")
     )
 
     # P7 + aggregation back to product granularity.
     name_key = F.struct(
         (-F.length(F.coalesce(F.col("product_name"), F.lit("")))).alias("neg_len"),
-        F.col("arrival.rank").alias("rank"),
-        F.col("arrival.scraped_at").alias("scraped_at"),
-        F.col("arrival.url").alias("url"),
+        F.col("arrival"),
     )
     merged = o.groupBy("product_id").agg(
         # first-seen product supplies brand/model/category (deterministic min over arrival)
@@ -151,7 +163,7 @@ def merge_products(products: DataFrame) -> DataFrame:
         F.struct(
             F.col("sources").alias("sources"), ts.alias("created_at"), ts.alias("last_updated")
         ).alias("metadata"),
-    ).filter(F.size("offers") > 0)
+    )
 
 
 def flatten_offers(merged: DataFrame) -> DataFrame:

@@ -35,6 +35,15 @@ def get_spark(
       cheap and undersizing is not — callers can raise it via the arg.
     - UTC session timezone so timestamp semantics match the DuckDB
       oracle (naive-UTC) used by the correctness gate.
+    - No per-Column call-site capture
+      (``spark.python.sql.dataFrameDebugging.enabled=false``).  With it on,
+      every ``functions``/Column call records its Python call site over
+      py4j (an active-session lookup, a conf read, an origin set and
+      clear, a stack walk): a ``run_etl`` build on ``tests/fixtures``
+      makes 9.4k round trips with it and 4.9k without.  The cost is that
+      ANSI runtime errors lose the Python fragment of their DataFrame
+      query context.  PySpark caches the flag for the whole process on
+      the first Column call, so it can only be set here, at session build.
     """
     cpus = cpus or default_parallelism()
     shuffle = shuffle_partitions or max(cpus, 4)
@@ -61,6 +70,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():

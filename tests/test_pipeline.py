@@ -19,7 +19,7 @@ FIXTURES = str(Path(__file__).parent / "fixtures")
 @pytest.fixture(scope="module")
 def etl(spark):
     res = run_etl(spark, FIXTURES)
-    res.merged.count()  # materialize the persist
+    res.merged.count()  # materialize the checkpoint
     yield res
     res.merged.unpersist()
 
@@ -102,6 +102,44 @@ def test_determinism_rerun(spark, etl):
     for pid in a:
         assert [o.url for o in a[pid].offers] == [o.url for o in b[pid].offers]
         assert a[pid].specifications == b[pid].specifications
+
+
+def test_dedup_keeps_earliest_copy_whatever_the_order(spark):
+    """Two copies of one (product_id, source, url, price) offer that differ
+    elsewhere (a repost: later scraped_at, longer title, other specs)
+    merge to the earliest copy's row under either union order and any
+    input partitioning — not to whichever copy the shuffle saw first."""
+    from etl_marketeye_airflow_spark.operators.merge import merge_products
+    from etl_marketeye_airflow_spark.schemas import MASTER_SCHEMA
+
+    def doc(scraped_at, name, specs):
+        offer = ("Avito", 9000.0, None, "MAD", "new", "private", "Sami",
+                 ("Rabat", "Agdal"), None, None, "https://avito.ma/x", scraped_at)
+        return ("Apple iPhone15", "Apple", "iPhone 15", name, "phone", specs, [offer],
+                (["Avito"], None, None))
+
+    first = spark.createDataFrame(
+        [doc("2026-01-01T10:00:00", "iPhone 15", {"storage": "128GB"})], MASTER_SCHEMA)
+    repost = spark.createDataFrame(
+        [doc("2026-01-02T09:00:00", "iPhone 15 128GB comme neuf",
+             {"storage": "128 Go", "color": "noir"})], MASTER_SCHEMA)
+
+    def merged_row(df):
+        rows = merge_products(df).collect()
+        assert len(rows) == 1
+        out = rows[0].asDict(recursive=True)
+        out["metadata"].pop("created_at"), out["metadata"].pop("last_updated")
+        return out
+
+    variants = []
+    for a, b in ((first, repost), (repost, first)):
+        u = a.unionByName(b)
+        variants += [merged_row(u), merged_row(u.coalesce(1)), merged_row(u.repartition(3))]
+    want = variants[0]
+    assert want["product_name"] == "iPhone 15"
+    assert want["specifications"] == {"storage": "128GB"}
+    assert [o["scraped_at"] for o in want["offers"]] == ["2026-01-01T10:00:00"]
+    assert all(v == want for v in variants), variants
 
 
 def _jobs_in_group(spark, group, action):

@@ -93,6 +93,62 @@ def test_adapters_stay_codegen(spark):
     assert res_opt < 500_000
 
 
+def _merged_plans(spark):
+    from etl_marketeye_airflow_spark.jobs import run_etl
+
+    merged = run_etl(spark, "tests/fixtures", persist=False).merged
+    return merged._jdf.queryExecution().optimizedPlan().toString(), executed_plan(merged)
+
+
+def test_merge_adds_no_size_filter_above_the_adapters(spark):
+    """An inner explode of the offers would infer `size(offers) > 0`,
+    which the optimizer pushes through each adapter's projection onto
+    its scan, re-running every offer expression per row (conv 2b)."""
+    import re
+
+    optimized, _ = _merged_plans(spark)
+    filters = [line for line in optimized.splitlines()
+               if re.match(r"^[\s:+\-|]*Filter ", line) and "size(" in line]
+    assert not filters, filters
+
+
+def test_merge_runs_one_exchange(spark):
+    """The dedup and the product aggregate share one hash repartition on
+    product_id."""
+    import re
+
+    _, executed = _merged_plans(spark)
+    assert len(re.findall(r"\bExchange ", executed)) == 1, executed
+
+
+def test_etl_build_round_trips_stay_bounded(spark):
+    """A run_etl build makes ~4.9k py4j round trips with per-Column
+    call-site capture off (9.4k with it on).  Only the building thread's
+    calls count: py4j's finalizer thread sends proxy deletions whenever
+    Python's collector frees them."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from etl_marketeye_airflow_spark.jobs import run_etl
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    builder, calls = threading.get_ident(), 0
+    send = ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == builder
+        return send(self, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        run_etl(spark, "tests/fixtures", persist=False)
+    finally:
+        ClientServerConnection.send_command = send
+    assert calls < 7_500, calls
+
+
 def test_topk_uses_partitioned_window_not_global_sort(spark):
     plan = executed_plan(reg.QUERIES["q15_topk_per_group"](spark, SF))
     assert "Window" in plan
@@ -303,16 +359,25 @@ def test_registry_has_no_unbounded_global_windows(spark):
     """Registry-wide guard (r6 verdict item 4): no query plan may
     contain an unpartitioned ORDERED window — Spark's 'Moving all data
     to a single partition' — unless its frame is config-bounded and
-    allowlisted above.  ~2 min: it builds every registry plan."""
+    allowlisted above.  The same loop is the conf-hygiene gate: building
+    a query's plan must leave the session conf exactly as it found it
+    (no key added, changed or removed; conv 5).  ~2 min: it builds every
+    registry plan."""
     from etl_marketeye_airflow_spark.plans.explain import (
         unpartitioned_windows,
     )
 
-    offenders = {}
+    offenders, leaks = {}, {}
     for name in sorted(reg.QUERIES):
+        before = spark.conf.getAll
         df = reg.QUERIES[name](spark, SF)
+        after = spark.conf.getAll
+        if before != after:
+            leaks[name] = {k: (before.get(k), after.get(k))
+                           for k in before.keys() | after.keys() if before.get(k) != after.get(k)}
         uw = unpartitioned_windows(executed_plan(df))
         spark.catalog.clearCache()
         if uw and not _BOUNDED_WINDOW_ALLOWLIST.get(name):
             offenders[name] = uw[0][:160]
     assert not offenders, offenders
+    assert not leaks, leaks
