@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .conf_scope import scoped_conf, table_bytes
 from .sources.tables import load_events, load_table
 from .streaming.ingest import drain_available_now
 
@@ -383,20 +384,10 @@ _Q80_SH_SQL = _Q47_SH_FULL_SQL.replace(
 # surface); float discipline per convention #1 throughout.
 # ---------------------------------------------------------------------------
 
-from contextlib import contextmanager
-
-
-@contextmanager
 def _utc(spark: SparkSession):
-    """Pin the session TZ to UTC for year()/timestamp-literal stability
-    (q67/q69 precedent, made reusable).  Restores the previous value —
-    convention #5."""
-    prev = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev)
+    """Pin the session TZ to UTC for year()/timestamp-literal stability,
+    scoped per convention #5."""
+    return scoped_conf(spark, {"spark.sql.session.timeZone": "UTC"})
 
 
 # Shared decimal-exact "volume" fragment (both engines): price*(1-disc).
@@ -438,10 +429,7 @@ def _spread_heavy_scan(
     n_parts = df.rdd.getNumPartitions()
     if n_parts >= par:
         return df
-    try:
-        sz = _os.path.getsize(_os.path.join(sf_dir, f"{table}.parquet"))
-    except OSError:
-        sz = 0
+    sz = table_bytes(sf_dir, table)
     try:
         min_mb = int(_os.environ.get("SPARK_GRAFT_SPREAD_MIN_MB", "32"))
     except ValueError:  # a malformed override falls back to the default

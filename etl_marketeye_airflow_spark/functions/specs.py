@@ -122,8 +122,3 @@ def merge_spec_maps(first: Column, second: Column) -> Column:
     return F.map_concat(
         F.map_filter(second, lambda k, v: ~F.array_contains(F.map_keys(first), k)), first
     )
-
-
-def specs_to_json(specs_map: Column) -> Column:
-    """F16: serialize the spec map for the relational sink."""
-    return F.to_json(specs_map)

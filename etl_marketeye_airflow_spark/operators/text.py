@@ -83,13 +83,6 @@ def language_from_hits(h: Column) -> Column:
     return expr.otherwise(F.lit("und"))
 
 
-def language_id(c: Column) -> Column:
-    """One-Column convenience form of language_hits→language_from_hits
-    (struct subtree repeats per field access — fine per-row / small
-    scans; for corpus scans stage ``language_hits`` first)."""
-    return language_from_hits(language_hits(c))
-
-
 def quality_score(c: Column, target_len: int = 500) -> Column:
     """Heuristic quality in [0,1]: length saturation + stopword presence
     + alphabetic purity (weights 0.4/0.3/0.3).
@@ -154,18 +147,14 @@ def word_ngrams_all(c: Column, n: int) -> Column:
 
 
 def dup_fraction_from_grams(grams: Column) -> Column:
-    """1 − distinct/total over a (staged) gram-array column."""
+    """Gopher-style repetition signal over a (staged) gram-array column:
+    fraction of grams that are repeats of an earlier gram, 1 −
+    distinct/total.  0 for clean prose, → 1 for looping boilerplate.
+    Exact integer ratio → one double division, bit-reproducible in
+    oracle SQL."""
     return F.lit(1.0) - (
         F.size(F.array_distinct(grams)).cast("double") / F.size(grams).cast("double")
     )
-
-
-def duplicate_ngram_fraction(c: Column, n: int = 3) -> Column:
-    """Gopher-style repetition signal: fraction of word n-grams that are
-    repeats of an earlier gram, 1 − distinct/total.  0 for clean prose,
-    → 1 for looping boilerplate.  Exact integer ratio → one double
-    division, bit-reproducible in oracle SQL."""
-    return dup_fraction_from_grams(word_ngrams_all(c, n))
 
 
 # --- PII redaction ----------------------------------------------------------

@@ -761,26 +761,16 @@ def q154_streaming_session_windows(
     the operator)."""
     import uuid
 
+    from .conf_scope import scoped_conf, state_partitions
     from .sources.tables import load_events_stream
     from .streaming.ingest import session_event_totals
 
     # State-partition count = session-state stores + delta files per
     # micro-batch; size-adaptive like q117 (r13 A/B, two windows:
     # 8 parts 3.42/3.65 s vs ambient-32 4.90/5.61 s —
-    # probes/r13_stream_parts_ab.json).  Partition count never affects
-    # results (session state is key-partitioned either way).
-    import os as _os
-
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        _sz = _os.path.getsize(_os.path.join(sf_dir, "events.parquet"))
-    except OSError:
-        _sz = 0
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        "8" if _sz < (64 << 20) else str(spark.sparkContext.defaultParallelism),
-    )
-    try:
+    # probes/r13_stream_parts_ab.json).
+    parts = state_partitions(spark, sf_dir, "events")
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": parts}):
         stream = load_events_stream(spark, sf_dir)
         out = session_event_totals(stream, "30 minutes", "10 minutes", "_t")
         name = f"q154_out_{uuid.uuid4().hex[:8]}"
@@ -793,8 +783,6 @@ def q154_streaming_session_windows(
         )
         drain_available_now(q)
         return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
 @query(

@@ -476,12 +476,11 @@ def q63_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained pair set equals the batch interval self-join (oracle)."""
     import uuid
 
+    from .conf_scope import scoped_conf
     from .sources.tables import load_events_stream
     from .streaming.joins import stream_interval_join
 
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         purchases = (
             load_events_stream(spark, sf_dir)
             .filter(F.col("event_type") == "purchase")
@@ -520,8 +519,6 @@ def q63_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         drain_available_now(q)
         return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
 @query(
@@ -668,9 +665,7 @@ def q67_tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact joins (broadcast both), so the disjunction never reaches the
     big join as a residual condition; year() runs under an explicitly
     pinned UTC session so timestamp→year is engine-identical."""
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
+    with _utc(spark):
         pair = ("NATION_1", "NATION_2")
         n = _t(spark, sf_dir, "nation").filter(F.col("n_name").isin(*pair))
         s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
@@ -702,8 +697,6 @@ def q67_tpch_q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         # so restoring the conf can't retroactively change semantics
         out.schema
         return out
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
 
 @query(

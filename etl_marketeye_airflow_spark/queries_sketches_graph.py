@@ -182,6 +182,7 @@ def q117_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     one correctly-rounded double cast before the Arrow boundary."""
     import uuid
 
+    from .conf_scope import scoped_conf, state_partitions
     from .streaming.stateful import cdc_upsert, compact_cdc_sink
 
     stream = (
@@ -219,26 +220,12 @@ def q117_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = f"q117_out_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     # State-partition count trades per-trigger state-store setup (8 is
     # right for small inputs) against per-key Python-call parallelism —
     # at sf10 the drain makes ~1.5 M per-key calls, and 8 tasks was the
-    # sf10 probe's bottleneck (351.9 s, worst in the r9 subset).  Scale
-    # with the input: small file → 8, big file → every core.  Partition
-    # count never affects results (state is key-partitioned either way).
-    import os as _os
-
-    try:
-        _sz = _os.path.getsize(_os.path.join(sf_dir, "orders.parquet"))
-    except OSError:
-        _sz = 0
-    _parts = (
-        "8"
-        if _sz < (64 << 20)
-        else str(spark.sparkContext.defaultParallelism)
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", _parts)
-    try:
+    # sf10 probe's bottleneck (351.9 s, worst in the r9 subset).
+    parts = state_partitions(spark, sf_dir, "orders")
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": parts}):
         q = (
             cdc_upsert(log)
             .writeStream.outputMode("update")
@@ -248,8 +235,6 @@ def q117_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         drain_available_now(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     # Update-mode memory sink appends one row per CHANGED key PER
     # MICRO-BATCH — the raw read equals the final state only for a
     # single-batch drain.  Compact per key on the emitted seq BEFORE the
@@ -1202,6 +1187,7 @@ def q136_streaming_quantile_sketch(
     compose interchangeably."""
     import uuid
 
+    from .conf_scope import scoped_conf
     from .operators.corpus import dyadic_histogram
     from .sources.tables import load_documents_stream
     from .streaming.ingest import drain_available_now
@@ -1214,9 +1200,7 @@ def q136_streaming_quantile_sketch(
         stream.select("n_chars"), "n_chars", sub_bits=5
     )
     name = f"q136_out_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = (
             sketch.writeStream.format("memory")
             .queryName(name)
@@ -1225,8 +1209,6 @@ def q136_streaming_quantile_sketch(
             .start()
         )
         drain_available_now(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return compact_sketch_sink(spark.table(name))
 
 

@@ -38,31 +38,21 @@ def q31_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     state equals the batch date_trunc aggregation (the oracle)."""
     import uuid
 
+    from .conf_scope import scoped_conf, state_partitions
     from .sources.tables import load_events_stream
     from .streaming.ingest import windowed_event_counts
 
     # window_start strings render in the SESSION timezone; pin UTC so a
-    # driver session running under any system TZ matches the oracle
-    # (load_events_stream handles the nanosAsLong save/restore itself)
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # session running under any system TZ matches the oracle.
     # State-partition count = state-store instances + delta files per
     # micro-batch; size-adaptive like q117 (r13 A/B, two windows:
     # 8 parts 1.59 s vs ambient-32 2.39 s — probes/r13_stream_parts_ab
-    # .json).  Partition count never affects results (state is
-    # key-partitioned either way).
-    import os as _os
-
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        _sz = _os.path.getsize(_os.path.join(sf_dir, "events.parquet"))
-    except OSError:
-        _sz = 0
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        "8" if _sz < (64 << 20) else str(spark.sparkContext.defaultParallelism),
-    )
-    try:
+    # .json).
+    parts = state_partitions(spark, sf_dir, "events")
+    with scoped_conf(spark, {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": parts,
+    }):
         stream = (
             load_events_stream(spark, sf_dir)
             .withColumn("ts", F.col("_t"))
@@ -81,9 +71,6 @@ def q31_streaming_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         drain_available_now(q)
         return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
 
 # ---------------------------------------------------------------------------
@@ -179,24 +166,19 @@ def q34_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_sinks_streaming.py)."""
     import uuid
 
+    from .conf_scope import scoped_conf
+    from .sources.tables import load_events_stream
     from .streaming.stateful import (
         compact_running_totals_sink,
         running_user_totals,
     )
 
-    prev_nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stream = spark.readStream.schema(
-        "event_id long, ts long, user_id long, event_type string, value double, props string"
-    ).option("pathGlobFilter", "events.parquet").parquet(sf_dir)
+    stream = load_events_stream(spark, sf_dir).select("user_id", "value")
     name = f"q34_out_{uuid.uuid4().hex[:8]}"
     # Stateful streams pay a per-partition state-store cost each batch;
     # at this key cardinality 8 partitions beats the session default
-    # (shuffle-partition conf is fixed at stream START — restore after,
-    # same for the nanos conf once the stream has fully terminated).
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # (shuffle-partition conf is fixed at stream START — restore after).
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = (
             running_user_totals(stream, exact_bits=20)
             .writeStream.format("memory")
@@ -206,12 +188,6 @@ def q34_stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         drain_available_now(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if prev_nanos is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev_nanos)
     # The append-mode sink holds one CUMULATIVE snapshot per (user,
     # batch) — correct raw only for a single-batch drain; compact to the
     # final per-user state so any batch split reads right (q117's fix,
@@ -897,14 +873,13 @@ def q50_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tested in tests/test_sinks_streaming.py)."""
     import uuid
 
+    from .conf_scope import scoped_conf
     from .sources.tables import load_documents_stream
     from .streaming.ingest import streaming_exact_dedup
 
     stream = load_documents_stream(spark, sf_dir)
     name = f"q50_out_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = (
             streaming_exact_dedup(stream)
             .writeStream.format("memory")
@@ -914,6 +889,4 @@ def q50_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         drain_available_now(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)

@@ -62,9 +62,7 @@ def q69_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     double casts and one division, identical IEEE ops either side —
     never a float accumulation (convention #1).  year() runs under a
     pinned UTC session (q67 precedent)."""
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
+    with _utc(spark):
         vol = F.col("l_extendedprice").cast("decimal(12,4)") * (
             F.lit(1).cast("decimal(6,4)") - F.col("l_discount").cast("decimal(6,4)")
         )
@@ -120,8 +118,6 @@ def q69_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("o_year", "mkt_share", "total_volume")
         )
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
 
 
 @query(

@@ -11,6 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..conf_scope import scoped_conf
+
 TABLES = (
     "region",
     "nation",
@@ -80,26 +82,14 @@ def events_ts_divisor(sf_dir: str) -> int:
     return 1000 if unit == "ns" else 1
 
 
-def _with_nanos_conf(spark: SparkSession, read):
-    """Run ``read()`` with nanosAsLong set, restoring the conf after.
-
-    Needed only when the file is TIMESTAMP(NANOS) (Spark 4 otherwise
-    rejects the footer even under an explicit long schema); harmless for
-    micros files.  The conf is captured at DataFrame-CREATION time
-    (verified: actions on the returned df succeed after restore), so
-    restore immediately — leaking it would silently change
-    nano-timestamp parquet reads for every later query on the shared
-    driver session (convention #5).
-    """
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        return read()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
+# Scoped around creating an events reader.  Needed only when the file is
+# TIMESTAMP(NANOS) (Spark 4 otherwise rejects the footer even under an
+# explicit long schema); harmless for micros files.  The conf is captured
+# at DataFrame-CREATION time (verified for batch reads and for a stream
+# drained after the restore), so it is restored at once: leaking it would
+# silently change nano-timestamp parquet reads for every later query on
+# the shared registry session (convention #5).
+_NANOS_AS_LONG = {"spark.sql.legacy.parquet.nanosAsLong": "true"}
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -114,12 +104,10 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     div = events_ts_divisor(sf_dir)
-    df = _with_nanos_conf(
-        spark,
-        lambda: spark.read.schema(EVENTS_STREAM_SCHEMA).parquet(
+    with scoped_conf(spark, _NANOS_AS_LONG):
+        df = spark.read.schema(EVENTS_STREAM_SCHEMA).parquet(
             f"{sf_dir}/events.parquet"
-        ),
-    )
+        )
     return df.withColumn("ts_us", F.expr(f"ts div {div}"))
 
 
@@ -129,20 +117,18 @@ def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ``ts_us`` (integer µs) for exact arithmetic.
 
     One definition for the schema string, the unit detection, and the
-    nanosAsLong save/restore dance — q31/q63/q65-style streaming queries
-    must not each carry their own copy that can drift.
+    scoped nanosAsLong conf — every events-streaming query reads through
+    here rather than carrying its own copy that can drift.
     """
     from pyspark.sql import functions as F
 
     div = events_ts_divisor(sf_dir)
-    df = _with_nanos_conf(
-        spark,
-        lambda: (
+    with scoped_conf(spark, _NANOS_AS_LONG):
+        df = (
             spark.readStream.schema(EVENTS_STREAM_SCHEMA)
             .option("pathGlobFilter", "events.parquet")  # file source needs a DIR
             .parquet(sf_dir)
-        ),
-    )
+        )
     return df.withColumn("ts_us", F.expr(f"ts div {div}")).withColumn(
         "_t", F.timestamp_micros(F.expr(f"ts div {div}"))
     )

@@ -12,6 +12,7 @@ family at 100 TB.
 import pytest
 from pyspark.sql import functions as F
 
+from etl_marketeye_airflow_spark.conf_scope import scoped_conf
 from etl_marketeye_airflow_spark.plans import executed_plan
 
 SF = "/root/testdata/sf0.001"
@@ -20,10 +21,8 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture
 def no_broadcast(spark):
     """Force the SMJ path: broadcast would hide the Exchange question."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        yield
 
 
 def test_bucketed_join_runs_with_zero_exchanges(spark, no_broadcast):
@@ -69,17 +68,14 @@ def test_bucket_pruning_on_point_lookup(spark):
     o = spark.read.parquet(f"{SF}/orders.parquet").select(
         "o_orderkey", "o_totalprice"
     )
-    prev = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
+    no_auto = {"spark.sql.sources.bucketing.autoBucketedScan.enabled": "false"}
     try:
-        (o.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-          .mode("overwrite").saveAsTable("t_o_pruned"))
-        q = spark.table("t_o_pruned").filter(F.col("o_orderkey") == 7)
-        plan = executed_plan(q)
-        assert "SelectedBucketsCount: 1 out of 8" in plan
-        assert q.count() <= 1
+        with scoped_conf(spark, no_auto):
+            (o.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+              .mode("overwrite").saveAsTable("t_o_pruned"))
+            q = spark.table("t_o_pruned").filter(F.col("o_orderkey") == 7)
+            plan = executed_plan(q)
+            assert "SelectedBucketsCount: 1 out of 8" in plan
+            assert q.count() <= 1
     finally:
-        spark.conf.set(
-            "spark.sql.sources.bucketing.autoBucketedScan.enabled", prev
-        )
         spark.sql("DROP TABLE IF EXISTS t_o_pruned")

@@ -3,6 +3,7 @@ asserted here so they can't silently regress (SURVEY §4: pushdown /
 broadcast / codegen are the engine's whole performance story)."""
 
 from etl_marketeye_airflow_spark import queries as reg
+from etl_marketeye_airflow_spark.conf_scope import scoped_conf
 from etl_marketeye_airflow_spark.plans import (
     executed_plan,
     has_broadcast_join,
@@ -292,10 +293,7 @@ def test_aqe_splits_skewed_join(spark):
         "spark.sql.autoBroadcastJoinThreshold": "-1",  # force SMJ
         "spark.sql.shuffle.partitions": "8",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, confs):
         left = spark.range(200_000).select(
             F.when(F.col("id") < 150_000, F.lit(0))
             .otherwise(F.col("id") % 999 + 1)
@@ -310,12 +308,6 @@ def test_aqe_splits_skewed_join(spark):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "isFinalPlan=true" in plan
         assert "skew=true" in plan, plan[:2000]
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_tpch_subquery_shapes_decorrelate_cleanly(spark):
@@ -355,23 +347,38 @@ _BOUNDED_WINDOW_ALLOWLIST = {
 }
 
 
+# Keys that registry queries scope for themselves.  The hygiene gate
+# unsets them before each query: a restore that sets an absent key to its
+# default only shows when the key was absent, and once one query leaks a
+# key every later query would find it set.
+_SCOPED_KEYS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.session.timeZone",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+
 def test_registry_has_no_unbounded_global_windows(spark):
     """Registry-wide guard (r6 verdict item 4): no query plan may
     contain an unpartitioned ORDERED window — Spark's 'Moving all data
     to a single partition' — unless its frame is config-bounded and
     allowlisted above.  The same loop is the conf-hygiene gate: building
     a query's plan must leave the session conf exactly as it found it
-    (no key added, changed or removed; conv 5).  ~2 min: it builds every
-    registry plan."""
+    (no key added, changed or removed; conv 5).  It runs in a plain
+    session with ``_SCOPED_KEYS`` unset, as a bare-builder session has them.
+    ~2 min: it builds every registry plan."""
     from etl_marketeye_airflow_spark.plans.explain import (
         unpartitioned_windows,
     )
 
+    plain = spark.newSession()
     offenders, leaks = {}, {}
     for name in sorted(reg.QUERIES):
-        before = spark.conf.getAll
-        df = reg.QUERIES[name](spark, SF)
-        after = spark.conf.getAll
+        for k in _SCOPED_KEYS:
+            plain.conf.unset(k)
+        before = plain.conf.getAll
+        df = reg.QUERIES[name](plain, SF)
+        after = plain.conf.getAll
         if before != after:
             leaks[name] = {k: (before.get(k), after.get(k))
                            for k in before.keys() | after.keys() if before.get(k) != after.get(k)}

@@ -6,6 +6,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from etl_marketeye_airflow_spark.conf_scope import scoped_conf
 from etl_marketeye_airflow_spark.operators import text as tx
 from etl_marketeye_airflow_spark.operators.dedup import (
     exact_dedup,
@@ -160,7 +161,7 @@ def test_text_metrics(spark):
         tx.whitespace_token_count(F.col("text")).alias("ws"),
         tx.regex_token_count(F.col("text")).alias("bpe"),
         tx.stopword_ratio(F.col("text")).alias("sr"),
-        tx.language_id(F.col("text")).alias("lang"),
+        tx.language_from_hits(tx.language_hits(F.col("text"))).alias("lang"),
     ).collect()[0]
     assert row.ws == 5
     assert row.bpe == 6  # the, cat, and, the, dog, !
@@ -170,7 +171,8 @@ def test_text_metrics(spark):
 
 def test_language_id_und(spark):
     df = spark.createDataFrame([("zzz qqq xxx",)], "text string")
-    assert df.select(tx.language_id(F.col("text")).alias("l")).collect()[0].l == "und"
+    lang = tx.language_from_hits(tx.language_hits(F.col("text")))
+    assert df.select(lang.alias("l")).collect()[0].l == "und"
 
 
 def test_fingerprint_order_sensitivity(spark):
@@ -423,7 +425,9 @@ def test_duplicate_ngram_fraction(spark):
     )
     out = [
         r.f
-        for r in df.select(tx.duplicate_ngram_fraction(F.col("text"), 2).alias("f")).collect()
+        for r in df.select(
+            tx.dup_fraction_from_grams(tx.word_ngrams_all(F.col("text"), 2)).alias("f")
+        ).collect()
     ]
     assert out[0] == pytest.approx(1 - 2 / 5)
     assert out[1] == 0.0
@@ -554,7 +558,7 @@ def test_repetition_metrics_edge_texts(spark):
     fractions, never divide-by-zero nulls."""
     df = spark.createDataFrame([("word",), (" ",)], "text string")
     out = df.select(
-        tx.duplicate_ngram_fraction(F.col("text"), 3).alias("f")
+        tx.dup_fraction_from_grams(tx.word_ngrams_all(F.col("text"), 3)).alias("f")
     ).collect()
     assert all(r.f == 0.0 for r in out)
 
@@ -1660,16 +1664,9 @@ def test_ema_fixed_point_streaming_fold_matches_reference(spark):
     df = spark.createDataFrame(
         rows, "user_id long, ts_us long, event_id long, cents long"
     )
-    old_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-    try:
+    with scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "4096"}):
         out = ema_fixed_point(df, "user_id", ["ts_us", "event_id"], "cents")
         got = {r.user_id: (r.n_events, r.ema_fx) for r in out.collect()}
-    finally:
-        if old_batch is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_batch)
 
     def ref(events):  # sequential reference fold
         events = sorted(events)
