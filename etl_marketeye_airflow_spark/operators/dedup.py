@@ -322,10 +322,26 @@ def near_dup_clusters(
     flow over distributed data, never data on the driver.
 
     ``stats`` (optional dict) receives {"rounds": n} — rounds that
-    changed at least one label (used by convergence tests).
+    changed at least one label (used by convergence tests).  Convergence
+    is a round that changes nothing, and ``max_iterations`` counts that
+    confirming round too: labels that settle in n changing rounds need
+    ``max_iterations >= n + 1``.  Running out of rounds raises
+    RuntimeError (never unconverged labels); ``max_iterations < 1`` is
+    a ValueError.
+
+    The pairs are persisted and counted.  Up to
+    ``loop_kernels.KERNEL_MAX_EDGES`` pairs all rounds are one NumPy
+    task over them (``loop_kernels.components``, same rounds and
+    ``stats``), materialized like a round would be; above it the cached
+    pairs feed the edge materialization (one read instead of the
+    union's two upstream scans) and are dropped right after.
 
     Returns (id, cluster) — cluster = min doc id reachable.
     """
+    from . import loop_kernels as lk
+
+    if max_iterations < 1:
+        raise ValueError("max_iterations must be >= 1")
     spark = pairs.sparkSession
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
@@ -347,14 +363,27 @@ def near_dup_clusters(
 
             release_local_checkpoint(df)
 
+    p = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).persist()
+    if lk.small(p):
+        t = lk.id_type(p, "src", "dst")
+        out = lk.run(
+            p, lk.components,
+            lk.schema(("id", t), ("cluster", t), ("rounds", lk.LONG)),
+            checkpoint=_materialize, max_iterations=max_iterations,
+        )
+        p.unpersist()
+        if stats is not None:
+            first = out.select("rounds").limit(1).collect()
+            stats["rounds"] = first[0][0] if first else 0
+        return out.select("id", "cluster")
     # Edges are scanned EVERY round: materialize once, or each iteration
     # recomputes the entire upstream pairs pipeline (for MinHash input
     # that's the full shingle+signature+join job × rounds).
     edges = _materialize(
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        p.unionByName(p.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
     )
+    p.unpersist()
     labels = _materialize(
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -398,6 +427,11 @@ def near_dup_clusters(
         if changed == 0:
             break
         rounds_used += 1
+    else:
+        raise RuntimeError(
+            f"near_dup_clusters did not converge in {max_iterations} rounds"
+            " - raise max_iterations"
+        )
     if stats is not None:
         stats["rounds"] = rounds_used
     return labels

@@ -25,6 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import loop_kernels as lk
+from .ranking import release_local_checkpoint
+
 PR_SCALE = 1_000_000
 
 
@@ -89,6 +92,11 @@ def pagerank_fixed_point(
     only ever the broadcast side, so losing their partitioning at the
     checkpoint costs nothing.  Both paths compute the identical exact
     integer recurrence.
+
+    Up to ``loop_kernels.KERNEL_MAX_EDGES`` edges the whole loop is one
+    NumPy task over the persisted edge frame (``loop_kernels.pagerank``,
+    same recurrence; the result is always materialized): two jobs, the
+    edge count and the kernel.
     """
     if iters < 0:
         raise ValueError("iters must be >= 0")
@@ -96,6 +104,17 @@ def pagerank_fixed_point(
     if weight_col is not None:
         cols.append(F.col(weight_col).cast("long").alias("_w"))
     e0 = edges.select(*cols).persist()
+    if lk.small(e0):
+        ranks = lk.run(
+            e0, lk.pagerank,
+            lk.schema(("node", lk.id_type(e0, "_src", "_dst")), ("rank_fx", lk.LONG)),
+            iters=iters, dangling_mass=dangling_mass,
+            weighted=weight_col is not None, scale=PR_SCALE,
+        )
+        e0.unpersist()
+        return ranks.withColumn(
+            "rank", F.col("rank_fx").cast("double") / F.lit(float(PR_SCALE))
+        )
     nodes = (
         e0.select(F.col("_src").alias("node"))
         .union(e0.select(F.col("_dst").alias("node")))
@@ -385,12 +404,23 @@ def kcore(
     data collect).  Rounds needed = peeling depth of the graph, small
     in practice (each round removes every currently-sub-k node at
     once); ``max_iters`` is a loud guard, not a silent truncation.
+    The first edge checkpoint is counted; up to
+    ``loop_kernels.KERNEL_MAX_EDGES`` edges the peeling is one NumPy
+    task over it (``loop_kernels.kcore``, same rounds, same guard).
     """
     if k < 1:
         raise ValueError("k must be >= 1")
     e = edges.select(
         F.col(src_col).alias("u"), F.col(dst_col).alias("v")
     ).localCheckpoint(eager=True)
+    if lk.small(e):
+        out = lk.run(
+            e, lk.kcore,
+            lk.schema(("node", lk.id_type(e, "u", "v")), ("deg", lk.LONG)),
+            k=k, max_iters=max_iters,
+        )
+        release_local_checkpoint(e)
+        return out
     for _ in range(max_iters):
         deg = (
             e.select(F.col("u").alias("node"))
@@ -474,10 +504,26 @@ def label_propagation(
     PageRank's cost model.  Labels localCheckpoint each round so the
     iterating side's plan never deepens (convention 2); both paths
     compute the identical exact-integer argmin.
+
+    The edge frame is persisted and counted.  Up to
+    ``loop_kernels.KERNEL_MAX_EDGES`` edges all rounds are one NumPy task
+    (``loop_kernels.label_propagation``); above it the cached edges feed
+    the ``nbrs`` fill (one read instead of the union's two upstream
+    scans) and are dropped as soon as ``nbrs`` is filled.
     """
     if iters < 0:
         raise ValueError("iters must be >= 0")
-    e = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
+    e = edges.select(
+        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
+    ).persist()
+    if lk.small(e):
+        t = lk.id_type(e, "u", "v")
+        out = lk.run(
+            e, lk.label_propagation, lk.schema(("node", t), ("label", t)),
+            iters=iters,
+        )
+        e.unpersist()
+        return out
     incidence = e.select(
         F.col("u").alias("node"), F.col("v").alias("nbr")
     ).unionByName(e.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
@@ -491,6 +537,7 @@ def label_propagation(
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
+    e.unpersist()
     n_nodes = labels.count()  # driver scalar (nbrs' cache filled by the
     # eager labels checkpoint above, which scans it)
     small_v = n_nodes <= broadcast_max_nodes
@@ -522,6 +569,19 @@ def _lpa_round(nbrs: DataFrame, labels: DataFrame, small_v: bool) -> DataFrame:
     )
 
 
+def _with_sources(e: DataFrame, sources: DataFrame) -> DataFrame:
+    """The BFS/SSSP kernel input, one frame for one task: the rows of
+    ``e`` (source, target[, weight]) as (_u, _v[, _w], _s=false), then
+    one (node, node[, 0], _s=true) row per source."""
+    names = ["_u", "_v", "_w"][: len(e.columns)]
+    s_cols = [F.col("node"), F.col("node"), F.lit(0).cast("long")]
+    return e.toDF(*names).withColumn("_s", F.lit(False)).unionByName(
+        sources.select(
+            *[c.alias(n) for c, n in zip(s_cols, names)], F.lit(True).alias("_s")
+        )
+    )
+
+
 def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
@@ -547,10 +607,25 @@ def bfs_distances(
     frontier's edge incidence, never the whole graph; ``max_hops``
     bounds the rounds (the 100 TB guard against high-diameter
     runaways).
+
+    The edge frame is persisted and counted.  Up to
+    ``loop_kernels.KERNEL_MAX_EDGES`` edges the expansion is one NumPy
+    task (``loop_kernels.bfs``) over the edges with the sources stacked
+    on; above it the loop below runs, its adjacency checkpoint reading
+    the cached edges, which are dropped as soon as it is built.
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
-    e = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
+    e = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v")).persist()
+    if lk.small(e):
+        both = _with_sources(e, sources)
+        out = lk.run(
+            both, lk.bfs,
+            lk.schema(("node", lk.id_type(both, "_u", "_v")), ("dist", lk.LONG)),
+            max_hops=max_hops,
+        )
+        e.unpersist()
+        return out
     nbrs = (
         e.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
         .unionByName(
@@ -558,6 +633,7 @@ def bfs_distances(
         )
         .localCheckpoint(eager=True)
     )
+    e.unpersist()
     frontier = sources.select("node").distinct().localCheckpoint(eager=True)
     visited = frontier.withColumn("dist", F.lit(0).cast("long"))
     visited = visited.localCheckpoint(eager=True)
@@ -636,6 +712,10 @@ def hits_fixed_point(
     PageRank-×2 cost model.  Two 1-row max broadcasts per round either
     way; state frames localCheckpoint'd (conv 2 — they are only ever
     the broadcast side, so the lost partitioning costs nothing).
+
+    Up to ``loop_kernels.KERNEL_MAX_EDGES`` edges all rounds are one
+    NumPy task (``loop_kernels.hits``), with the overflow bound above
+    checked loudly.
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
@@ -643,6 +723,18 @@ def hits_fixed_point(
     if weight_col is not None:
         cols.append(F.col(weight_col).cast("long").alias("_w"))
     e0 = edges.select(*cols).persist()
+    if lk.small(e0):
+        out = lk.run(
+            e0, lk.hits,
+            lk.schema(
+                ("node", lk.id_type(e0, "_src", "_dst")),
+                ("hub_fx", lk.LONG),
+                ("auth_fx", lk.LONG),
+            ),
+            iters=iters, weighted=weight_col is not None, scale=HITS_SCALE,
+        )
+        e0.unpersist()
+        return out
     nodes = (
         e0.select(F.col("_src").alias("node"))
         .unionByName(e0.select(F.col("_dst").alias("node")))
@@ -764,7 +856,11 @@ def sssp_rounds(
     sources are dist 0.  Scale shape: per round one edge⋈distance join
     + a map-side-combined min groupBy, localCheckpoint'd (conv 2 —
     the lineage would otherwise double per round); cost tracks edge
-    incidence of the reached set, never the whole graph.
+    incidence of the reached set, never the whole graph.  Up to
+    ``loop_kernels.KERNEL_MAX_EDGES`` edges all sweeps are one NumPy
+    task (``loop_kernels.sssp``) over the persisted edges with the
+    sources stacked on; above it the cached edges feed the adjacency
+    checkpoint and are dropped.
     """
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
@@ -772,12 +868,22 @@ def sssp_rounds(
         F.col(src_col).alias("_u"),
         F.col(dst_col).alias("_v"),
         F.col(weight_col).cast("long").alias("_w"),
-    )
+    ).persist()
+    if lk.small(e):
+        both = _with_sources(e, sources)
+        out = lk.run(
+            both, lk.sssp,
+            lk.schema(("node", lk.id_type(both, "_u", "_v")), ("dist", lk.LONG)),
+            rounds=rounds,
+        )
+        e.unpersist()
+        return out
     nb = e.unionByName(
         e.select(
             F.col("_v").alias("_u"), F.col("_u").alias("_v"), "_w"
         )
     ).localCheckpoint(eager=True)
+    e.unpersist()
     dist = (
         sources.select("node")
         .distinct()

@@ -1,9 +1,15 @@
 """Fixed-point PageRank: hand-computed ranks, ordering sanity, and
-rerun determinism (the properties behind q114's exact-integer oracle)."""
+rerun determinism (the properties behind q114's exact-integer oracle).
+
+Small inputs take the single-task NumPy kernel path
+(operators/loop_kernels.py); ``test_distributed_path`` reruns every
+hand-computed and reference test with ``KERNEL_MAX_EDGES`` forced to 0,
+so the distributed loops stay pinned by the same literals."""
 
 import pytest
 from pyspark.sql import functions as F
 
+from etl_marketeye_airflow_spark.operators import loop_kernels
 from etl_marketeye_airflow_spark.operators.graph import (
     PR_SCALE,
     pagerank_fixed_point,
@@ -540,17 +546,20 @@ def test_pagerank_round_is_exchange_free_on_broadcast_path(spark):
         deg.unpersist()
 
 
-def test_iterative_graph_fallback_paths_match_broadcast(spark):
+def test_iterative_graph_fallback_paths_match_broadcast(spark, monkeypatch):
     """The big-|V| shuffle-join fallbacks (broadcast_max_nodes exceeded)
     are dead code in every small-scale test unless forced — force them
     with a 1-node bound and pin bit-identical results against the
     broadcast path (the recurrences are exact integers, so ANY
-    divergence is a real bug, not noise)."""
+    divergence is a real bug, not noise).  Both sides run distributed:
+    the kernel path ignores broadcast_max_nodes."""
     from etl_marketeye_airflow_spark.operators.graph import (
         hits_fixed_point,
         label_propagation,
         pagerank_fixed_point,
     )
+
+    monkeypatch.setattr(loop_kernels, "KERNEL_MAX_EDGES", 0)
 
     e = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (1, 4), (4, 5), (5, 1), (2, 5), (6, 1)],
@@ -679,3 +688,124 @@ def test_weighted_collapse_matches_multigraph(spark):
             ).collect()
         }
         assert got == exp, bound
+
+
+# ------------------------------------------------ kernel vs distributed
+
+
+_BOTH_PATHS = [
+    test_pagerank_hand_computed_two_iters,
+    test_pagerank_star_center_dominates_and_deterministic,
+    test_pagerank_zero_iters_is_uniform_init,
+    test_pagerank_dangling_mass_hand_computed,
+    test_pagerank_both_forms_match_replica,
+    test_pagerank_dangling_conserves_more_mass,
+    test_kcore_hand_computed,
+    test_kcore_cascade_matches_python_reference,
+    test_kcore_fully_peeled_graph_is_empty,
+    test_kcore_guards,
+    test_lpa_two_cliques_with_bridge,
+    test_lpa_matches_python_reference,
+    test_bfs_distances_hand_computed,
+    test_bfs_distances_early_exit_and_isolated_source,
+    test_hits_matches_python_reference,
+    test_sssp_rounds_hand_graph,
+    test_weighted_collapse_matches_multigraph,
+]
+
+
+@pytest.mark.parametrize("case", _BOTH_PATHS, ids=lambda f: f.__name__[5:])
+def test_distributed_path(spark, monkeypatch, case):
+    """The hand-computed and reference tests above run the kernel path
+    (their graphs are tiny); rerun each with the bound at 0 so the
+    distributed loops meet the same literals."""
+    monkeypatch.setattr(loop_kernels, "KERNEL_MAX_EDGES", 0)
+    case(spark)
+
+
+def _sql_plans(spark, action) -> list[str]:
+    """Physical plans of the SQL executions ``action`` ran, read from the
+    session's SQL status store (what the UI's SQL tab shows)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def ids():
+        ex = store.executionsList()
+        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
+
+    before = set(ids())
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return [
+        str(x.physicalPlanDescription())
+        for k, x in ids().items() if k not in before
+    ]
+
+
+def test_above_bound_input_takes_distributed_path(spark, monkeypatch):
+    """An input one edge over KERNEL_MAX_EDGES runs the distributed
+    loop: none of its executed plans has a MapInPandas, while the same
+    input at the bound runs exactly one kernel plan — same ranks."""
+    e = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 3), (3, 1)], "src long, dst long"
+    )
+    got = {}
+
+    def ranks(bound):
+        monkeypatch.setattr(loop_kernels, "KERNEL_MAX_EDGES", bound)
+        got[bound] = sorted(pagerank_fixed_point(e, iters=2).collect())
+
+    above = _sql_plans(spark, lambda: ranks(3))
+    at = _sql_plans(spark, lambda: ranks(4))
+    assert above and not [p for p in above if "MapInPandas" in p]
+    assert len([p for p in at if "MapInPandas" in p]) == 1
+    assert got[3] == got[4]
+
+
+def _jobs_in_group(spark, group, action):
+    """Spark jobs one call runs, counted under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_kernel_loops_run_at_most_three_jobs(spark):
+    """Job-count guard: on a small graph the whole loop is the edge count
+    plus one kernel task (kcore also keeps its edge checkpoint) — the
+    distributed PageRank ran 29 jobs for q114, 25 of them in the loop."""
+    from etl_marketeye_airflow_spark.operators.dedup import near_dup_clusters
+    from etl_marketeye_airflow_spark.operators.graph import kcore
+
+    und = spark.createDataFrame(
+        [(a, b) for a in range(1, 6) for b in range(a + 1, 6)] + [(5, 6), (6, 7)],
+        "src long, dst long",
+    )
+    pairs = und.toDF("id_a", "id_b")
+    assert _jobs_in_group(
+        spark, "t-loop-pagerank", lambda: pagerank_fixed_point(und, iters=3)
+    ) <= 3
+    assert _jobs_in_group(spark, "t-loop-kcore", lambda: kcore(und, k=3)) <= 3
+    assert _jobs_in_group(
+        spark, "t-loop-components", lambda: near_dup_clusters(pairs)
+    ) <= 3
+
+
+@pytest.mark.parametrize("bound", [loop_kernels.KERNEL_MAX_EDGES, 0])
+def test_near_dup_clusters_cap_is_loud(spark, monkeypatch, bound):
+    """A 17-node path needs 5 changing rounds plus the confirming one:
+    with a 3-round cap both paths raise instead of returning
+    unconverged labels; a cap below one round is refused up front."""
+    from etl_marketeye_airflow_spark.operators.dedup import near_dup_clusters
+
+    monkeypatch.setattr(loop_kernels, "KERNEL_MAX_EDGES", bound)
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(16)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 3 rounds"):
+        near_dup_clusters(pairs, max_iterations=3).collect()
+    assert near_dup_clusters(pairs, max_iterations=6).count() == 17
+    with pytest.raises(ValueError, match="max_iterations must be >= 1"):
+        near_dup_clusters(pairs, max_iterations=0)

@@ -213,18 +213,34 @@ def test_q12_deterministic_under_ties(spark, tmp_path_factory):
     assert got == want
 
 
-@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 25), st.integers(0, 25)).filter(lambda e: e[0] != e[1]),
-        min_size=1,
-        max_size=40,
-    )
+_CC_EDGES = st.lists(
+    st.tuples(st.integers(0, 25), st.integers(0, 25)).filter(lambda e: e[0] != e[1]),
+    min_size=1,
+    max_size=40,
 )
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+@given(edges=_CC_EDGES)
 def test_near_dup_clusters_matches_union_find(spark, edges):
-    """Distributed CC (propagation + pointer jumping) must equal a
-    driver-side union-find on arbitrary random graphs — not just the
-    hand-built fixtures."""
+    """CC (propagation + pointer jumping) must equal a driver-side
+    union-find on arbitrary random graphs — not just the hand-built
+    fixtures.  Graphs this small run the single-task kernel."""
+    _check_cc_against_union_find(spark, edges)
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+@given(edges=_CC_EDGES)
+def test_near_dup_clusters_distributed_matches_union_find(spark, monkeypatch, edges):
+    """The same union-find reference for the distributed CC loop, forced
+    with ``KERNEL_MAX_EDGES`` at 0."""
+    from etl_marketeye_airflow_spark.operators import loop_kernels
+
+    monkeypatch.setattr(loop_kernels, "KERNEL_MAX_EDGES", 0)
+    _check_cc_against_union_find(spark, edges)
+
+
+def _check_cc_against_union_find(spark, edges):
     from etl_marketeye_airflow_spark.operators.dedup import near_dup_clusters
 
     norm = [(min(a, b), max(a, b)) for a, b in edges]

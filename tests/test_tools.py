@@ -232,6 +232,42 @@ def test_sweep_digest_sensitivity(tmp_path):
     assert "sources/tables.py" in SD.referenced_modules(src3, str(pkg))
 
 
+def test_sweep_digest_follows_package_imports(tmp_path):
+    """Module dependencies are followed transitively through relative
+    imports (a query importing graph.py pins the loop_kernels.py that
+    graph.py imports), and top-level package modules count
+    (`from .conf_scope import`, `from ..conf_scope import` inside
+    sources/tables.py); the registry modules are never pinned."""
+    from etl_marketeye_airflow_spark import sweep_digest as SD
+
+    pkg = tmp_path
+    for d in ("operators", "sources"):
+        (pkg / d).mkdir()
+    (pkg / "operators" / "graph.py").write_text(
+        "def pagerank():\n    from . import loop_kernels as lk\n"
+    )
+    (pkg / "operators" / "loop_kernels.py").write_text("K = 1\n")
+    (pkg / "conf_scope.py").write_text("S = 1\n")
+    (pkg / "sources" / "tables.py").write_text(
+        "from ..conf_scope import (\n    scoped_conf,\n)\n"
+        "from .._registry_base import _t\n"
+    )
+    (pkg / "_registry_base.py").write_text("R = 1\n")
+    src = "def q(spark, sf):\n    from .operators.graph import pagerank\n"
+    assert SD.referenced_modules(src, str(pkg)) == [
+        "operators/graph.py", "operators/loop_kernels.py",
+    ]
+    base = SD.query_digest(src, "SELECT 1", str(pkg))
+    (pkg / "operators" / "loop_kernels.py").write_text("K = 2\n")
+    assert SD.query_digest(src, "SELECT 1", str(pkg)) != base
+    src2 = "def q(spark, sf):\n    from .conf_scope import scoped_conf\n"
+    assert SD.referenced_modules(src2, str(pkg)) == ["conf_scope.py"]
+    src3 = "def q(spark, sf):\n    return load_events(spark, sf)\n"
+    assert SD.referenced_modules(src3, str(pkg)) == [
+        "conf_scope.py", "sources/tables.py",
+    ]
+
+
 def test_conv16_varchar_roundtrip_is_correctly_rounded():
     """conv 16's foundation, property-tested: for decimals past 2^53,
     DuckDB's `CAST(CAST(x AS VARCHAR) AS DOUBLE)` must equal Python's

@@ -318,14 +318,16 @@ def test_near_dup_clusters_long_chain(spark):
     assert set(labels.values()) == {0} and len(labels) == 11
 
 
-def test_near_dup_clusters_pointer_jumping_rounds(spark, tmp_path_factory):
+def test_near_dup_clusters_pointer_jumping_rounds(spark, tmp_path_factory, monkeypatch):
     """Pointer jumping makes convergence O(log diameter): a 17-node path
     graph (diameter 16) must settle in <= ceil(log2(16))+1 = 5 changing
     rounds, not ~16.  The reliable-checkpoint variant (checkpoint_dir
     set -> durable checkpoint(), survives executor loss on a cluster)
-    must produce identical labels."""
+    must produce identical labels; it runs the distributed loop
+    (KERNEL_MAX_EDGES forced to 0) so every round's checkpoint() runs."""
     import math
 
+    from etl_marketeye_airflow_spark.operators import loop_kernels
     from etl_marketeye_airflow_spark.operators.dedup import near_dup_clusters
 
     diameter = 16
@@ -338,6 +340,7 @@ def test_near_dup_clusters_pointer_jumping_rounds(spark, tmp_path_factory):
     assert stats["rounds"] <= math.ceil(math.log2(diameter)) + 1
 
     ckpt = str(tmp_path_factory.mktemp("cc_ckpt"))
+    monkeypatch.setattr(loop_kernels, "KERNEL_MAX_EDGES", 0)
     labels_ck = {
         r.id: r.cluster
         for r in near_dup_clusters(pairs, checkpoint_dir=ckpt).collect()
@@ -551,6 +554,29 @@ def test_near_dup_clusters_empty_pairs(spark):
     stats: dict = {}
     assert near_dup_clusters(pairs, stats=stats).count() == 0
     assert stats["rounds"] == 0
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        test_near_dup_clusters_transitive,
+        test_near_dup_clusters_long_chain,
+        test_near_dup_clusters_pointer_jumping_rounds,
+        test_near_dup_clusters_empty_pairs,
+    ],
+    ids=lambda f: f.__name__[len("test_near_dup_clusters_"):],
+)
+def test_near_dup_clusters_distributed_path(spark, tmp_path_factory, monkeypatch, case):
+    """The CC tests above run the single-task kernel (their graphs are
+    tiny); rerun each with ``KERNEL_MAX_EDGES`` at 0 so the distributed
+    loop meets the same assertions."""
+    import inspect
+
+    from etl_marketeye_airflow_spark.operators import loop_kernels
+
+    monkeypatch.setattr(loop_kernels, "KERNEL_MAX_EDGES", 0)
+    fixtures = {"spark": spark, "tmp_path_factory": tmp_path_factory, "monkeypatch": monkeypatch}
+    case(**{k: fixtures[k] for k in inspect.signature(case).parameters})
 
 
 def test_repetition_metrics_edge_texts(spark):
@@ -1571,11 +1597,14 @@ def test_zero_norm_vectors_excluded_everywhere(spark):
     assert 2 not in ids and {0, 1} <= ids
 
 
-def test_near_dup_clusters_releases_per_round_checkpoints(spark):
+def test_near_dup_clusters_releases_per_round_checkpoints(spark, monkeypatch):
     """The CC loop frees superseded per-round localCheckpoint blocks
     eagerly (the r8-ADVICE ranking.py class applied to the loop): after
     the call only the edges table and the FINAL labels round remain
-    persisted, regardless of how many rounds ran."""
+    persisted, regardless of how many rounds ran.  The loop is the
+    distributed path (KERNEL_MAX_EDGES forced to 0); the kernel path
+    leaves only its one materialized result."""
+    from etl_marketeye_airflow_spark.operators import loop_kernels
     from etl_marketeye_airflow_spark.operators.dedup import (
         near_dup_clusters,
     )
@@ -1595,6 +1624,13 @@ def test_near_dup_clusters_releases_per_round_checkpoints(spark):
         [(i, i + 1) for i in range(10)], "id_a long, id_b long"
     )
     stats: dict = {}
+    labels = near_dup_clusters(pairs, stats=stats)
+    assert stats["rounds"] >= 2
+    assert len(persisted_ids() - base) == 1  # kernel path: the result
+    assert labels.count() == 11
+    base = persisted_ids()
+    monkeypatch.setattr(loop_kernels, "KERNEL_MAX_EDGES", 0)
+    stats = {}
     labels = near_dup_clusters(pairs, stats=stats)
     assert stats["rounds"] >= 2  # multiple rounds actually happened
     added = persisted_ids() - base
