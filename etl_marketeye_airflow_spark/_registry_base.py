@@ -444,17 +444,35 @@ def _ppjoin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q99's pair engine as a reusable EAGER frame (id_a, id_b,
     jaccard) — also the pair stage of the dedup-aware split /
     canonicalization composites (q200/q202)."""
+    from pyspark.sql.types import DoubleType
+
+    from .operators import loop_kernels as lk
+    from .operators import pair_kernel
     from .operators.dedup import word_shingles
 
     # The shingle base fans out into FOUR branches (posting list,
     # prefix build, both verify sides) — persist it so the zip_with
     # shingle construction runs once, not per branch; eager result +
-    # unpersist on return (same lifecycle as q72/q104).
+    # unpersist on return (same lifecycle as q72/q104).  Null text is
+    # exactly null grams (dropped by every explode below); filtering the
+    # text keeps the shingle expression out of the filter (conv 2).
     sh = (
         _spread_heavy_scan(_t(spark, sf_dir, "documents"), sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
         .select("doc_id", word_shingles(F.col("text"), 3).alias("grams"))
         .persist()
     )
+    # Up to PAIR_KERNEL_MAX_POSTINGS postings the whole engine is one
+    # NumPy task on integer token ranks (operators/pair_kernel.py, the
+    # same filters and verify); the posting count also fills the cache.
+    if lk.small(sh.select(F.explode("grams")), pair_kernel.PAIR_KERNEL_MAX_POSTINGS):
+        id_t = sh.schema["doc_id"].dataType
+        out = lk.run(
+            sh, pair_kernel.ppjoin,
+            lk.schema(("id_a", id_t), ("id_b", id_t), ("jaccard", DoubleType())),
+        )
+        sh.unpersist()
+        return out
     post = sh.select("doc_id", F.explode("grams").alias("gram"))
     freq = post.groupBy("gram").agg(F.count("*").alias("cnt"))
     prefix = (

@@ -34,8 +34,9 @@ Kernel rules (CLAUDE.md conv 25):
 - null ids or weights are rejected loudly (the distributed joins never
   match a null key; no caller feeds one);
 - the shipped closure needs only stdlib, numpy, pandas and its captured
-  locals (conv 3): ``shipped`` registers this module with cloudpickle
-  BY VALUE, so a worker never imports the package.
+  locals (conv 3): ``shipped`` registers the kernel's module (this one,
+  or ``pair_kernel.py`` for the pair engine) with cloudpickle BY VALUE,
+  so a worker never imports the package.
 
 A kernel takes ``{column: ndarray}`` for the frame's columns plus its
 parameters and returns ``{column: ndarray}`` in the output schema's
@@ -74,13 +75,14 @@ _ERROR_LINE = re.compile(r"^(%s): (.*)$" % "|".join(_ERRORS), re.M)
 # --- driver side ------------------------------------------------------------
 
 
-def small(frame: DataFrame) -> bool:
-    """True when ``frame`` (persisted by the caller) has at most
-    ``KERNEL_MAX_EDGES`` rows.  The count is one job that also fills the
-    cache: a per-partition count summed on the driver, with no exchange
-    (``DataFrame.count()`` runs three under AQE: the cache build, the
-    partial-count exchange and the result)."""
-    return frame._jdf.queryExecution().toRdd().count() <= KERNEL_MAX_EDGES
+def small(frame: DataFrame, bound: int | None = None) -> bool:
+    """True when ``frame`` (over a frame the caller persisted) has at
+    most ``bound`` rows, by default ``KERNEL_MAX_EDGES``.  The count is
+    one job that also fills the cache: a per-partition count summed on
+    the driver, with no exchange (``DataFrame.count()`` runs three under
+    AQE: the cache build, the partial-count exchange and the result)."""
+    limit = KERNEL_MAX_EDGES if bound is None else bound
+    return frame._jdf.queryExecution().toRdd().count() <= limit
 
 
 def id_type(frame: DataFrame, *cols: str) -> DataType:
@@ -102,9 +104,9 @@ LONG = LongType()
 def shipped(kernel, names: list[str], out_names: list[str], params: dict):
     """The ``mapInPandas`` function: every batch of the one partition
     concatenated, nulls refused, ``kernel`` applied once.  Registers
-    this module for by-value pickling, so the function carries the
-    kernel's code instead of an import of the package."""
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    the kernel's module for by-value pickling, so the function carries
+    the kernel's code instead of an import of the package."""
+    cloudpickle.register_pickle_by_value(sys.modules[kernel.__module__])
 
     def apply(batches):
         import numpy as np

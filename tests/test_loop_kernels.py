@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from etl_marketeye_airflow_spark.operators import graph
 from etl_marketeye_airflow_spark.operators import loop_kernels as lk
+from etl_marketeye_airflow_spark.operators import pair_kernel
 from etl_marketeye_airflow_spark.operators.dedup import near_dup_clusters
 
 ID = st.integers(0, 12)
@@ -186,9 +187,10 @@ def test_object_id_index_matches_sorted_unique():
 
 
 def test_shipped_kernel_runs_without_the_package(tmp_path):
-    """Conv 3: the closure mapInPandas ships unpickles and runs in a
-    Python that cannot import the package (isolated mode, foreign cwd)
-    and imports nothing of it."""
+    """Conv 3: the closures mapInPandas ships (a loop kernel and the
+    pair kernel, each from its own module) unpickle and run in a Python
+    that cannot import the package (isolated mode, foreign cwd) and
+    import nothing of it."""
     from pyspark import cloudpickle
 
     fn = lk.shipped(
@@ -196,14 +198,21 @@ def test_shipped_kernel_runs_without_the_package(tmp_path):
         dict(iters=2, dangling_mass=False, weighted=False, scale=10**6),
     )
     (tmp_path / "fn.pkl").write_bytes(cloudpickle.dumps(fn))
+    pairs = lk.shipped(pair_kernel.ppjoin, ["doc_id", "grams"], ["id_a", "id_b", "jaccard"], {})
+    (tmp_path / "pairs.pkl").write_bytes(cloudpickle.dumps(pairs))
     code = (
         "import pickle, sys\n"
         "import pandas as pd\n"
         "fn = pickle.loads(open('fn.pkl', 'rb').read())\n"
         "pdf = pd.DataFrame({'_src': [1, 1, 2], '_dst': [2, 3, 3]})\n"
         "out = next(fn(iter([pdf])))\n"
+        "pairs = pickle.loads(open('pairs.pkl', 'rb').read())\n"
+        "docs = pd.DataFrame({'doc_id': [7, 3, 5],\n"
+        "                     'grams': [['a', 'b'], ['a', 'b', 'c'], ['x']]})\n"
+        "got = next(pairs(iter([docs])))\n"
         "assert not [m for m in sys.modules if m.startswith('etl_marketeye')]\n"
         "print(sorted(zip(out.node.tolist(), out.rank_fx.tolist())))\n"
+        "print(got.values.tolist())\n"
     )
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     r = subprocess.run(
@@ -211,4 +220,7 @@ def test_shipped_kernel_runs_without_the_package(tmp_path):
         capture_output=True, text=True, timeout=120,
     )
     assert r.returncode == 0, r.stderr
-    assert r.stdout.strip() == "[(1, 150000), (2, 213750), (3, 702500)]"
+    assert r.stdout.split("\n")[:2] == [
+        "[(1, 150000), (2, 213750), (3, 702500)]",
+        "[[3.0, 7.0, 0.6666666666666666]]",
+    ]

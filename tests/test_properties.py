@@ -7,6 +7,7 @@ minutes-slow), properties asserted over the batch.
 
 import re
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -936,6 +937,21 @@ def test_cluster_representatives_keep_best(spark, tmp_path_factory):
     assert got[1] == (2, 2)   # longer member kept
     assert got[5] == (5, 1)   # singleton
     assert got[7] == (7, 2)   # equal lengths -> smallest id
+
+
+@pytest.mark.parametrize(
+    "case",
+    [test_leakage_safe_split_coassigns_clusters, test_cluster_representatives_keep_best],
+    ids=lambda f: f.__name__[5:],
+)
+def test_pair_composites_on_distributed_pair_path(spark, tmp_path_factory, monkeypatch, case):
+    """q200 and q202 run the pair kernel above (tiny corpora); rerun
+    them with its bound at 0 so the distributed PPJoin plan meets the
+    same literals."""
+    from etl_marketeye_airflow_spark.operators import pair_kernel
+
+    monkeypatch.setattr(pair_kernel, "PAIR_KERNEL_MAX_POSTINGS", 0)
+    case(spark, tmp_path_factory)
 
 
 def test_token_budget_fill_inclusive_gate(spark, tmp_path_factory):

@@ -42,11 +42,14 @@ EXECUTES_ON_BUILD = {
     "q22_minhash_lsh_dedup": "eager (checkpointed pair set)",
     "q23_simhash_dedup": "eager (checkpointed pair set)",
     "q47_dedup_pipeline": "eager (checkpointed stages)",
-    "q43_dedup_clusters": "iterative (checkpointed rounds)",
+    "q43_dedup_clusters": "iterative (components as one NumPy kernel task at this size,"
+    " operators/loop_kernels.py; checkpointed rounds above KERNEL_MAX_EDGES)",
     "q72_near_dup_scalable": "eager (checkpointed pair set)",
     "q104_bloom_decontamination": "eager (bitmap built at call; checkpointed result)",
     "q108_semdedup": "eager (quantizer trained at call; checkpointed kept set)",
-    "q99_prefix_filter_similarity_join": "eager (persisted shingle base; checkpointed pair set)",
+    "q99_prefix_filter_similarity_join": "eager (persisted shingle base; one NumPy"
+    " pair-kernel task at this size, operators/pair_kernel.py; distributed"
+    " PPJoin above PAIR_KERNEL_MAX_POSTINGS)",
     "q125_kmv_set_ops": "eager (checkpointed input sketches)",
     "q127_quantile_estimate": "eager (checkpointed sketch base)",
     "q128_triangle_counts": "eager (checkpointed edge/orientation bases)",
@@ -54,13 +57,19 @@ EXECUTES_ON_BUILD = {
     "q130_pmi_bigrams": "eager (persisted token arrays; checkpointed result)",
     "q131_skyline_pareto": "eager two-pass (checkpointed result)",
     "q132_rrf_hybrid_fusion": "eager (checkpointed input rankings)",
-    "q114_pagerank": "iterative (checkpointed per-iteration ranks)",
-    "q153_hits": "iterative (checkpointed hub/auth rounds; broadcast-round"
-    " plan, see operators/graph.py:hits_fixed_point)",
-    "q149_label_propagation": "iterative (checkpointed rounds; per-round"
-    " plan pinned exchange-free by tests/test_graph.py)",
-    "q151_bfs_distances": "iterative (checkpointed frontier rounds)",
-    "q198_weighted_sssp": "iterative (checkpointed relaxation rounds)",
+    # the graph loops run as one NumPy kernel task up to
+    # loop_kernels.KERNEL_MAX_EDGES edges, sf0.001 included; the round
+    # plans named after the kernel are the distributed path above it
+    "q114_pagerank": "iterative (one NumPy kernel task at this size;"
+    " checkpointed per-iteration ranks above the bound)",
+    "q153_hits": "iterative (one NumPy kernel task at this size; checkpointed"
+    " broadcast-round hub/auth rounds above the bound)",
+    "q149_label_propagation": "iterative (one NumPy kernel task at this size;"
+    " exchange-free checkpointed rounds above the bound)",
+    "q151_bfs_distances": "iterative (one NumPy kernel task at this size;"
+    " checkpointed frontier rounds above the bound)",
+    "q198_weighted_sssp": "iterative (one NumPy kernel task at this size;"
+    " checkpointed relaxation rounds above the bound)",
     "q100_unigram_surprisal": "eager (persisted token stream; checkpointed result)",
     "q103_tfidf_topk": "eager (persisted tf base; checkpointed result)",
     "q106_bm25_topk": "eager (persisted tok/dl bases; checkpointed result)",
@@ -70,11 +79,15 @@ EXECUTES_ON_BUILD = {
     # r12: four eager composites the r11 audit fix missed — their rows
     # showed only the (near-vacuous) lazy tail after the checkpointed
     # stages ran at build.
-    "q142_kcore": "iterative (checkpointed peeling rounds)",
+    "q142_kcore": "iterative (edge checkpoint + one NumPy kernel task at this"
+    " size; checkpointed peeling rounds above the bound)",
     "q195_incremental_near_dup": "eager (persisted shingle base; checkpointed pair set)",
-    "q200_leakage_safe_split": "eager (PPJoin pair engine + checkpointed CC labels)",
-    "q202_cluster_representatives": "eager (PPJoin pair engine + checkpointed CC labels)",
-    "q157_entity_resolution": "eager CC stage (checkpointed rounds) + lazy rollup tail",
+    "q200_leakage_safe_split": "eager (pair and components kernels, one NumPy"
+    " task each at this size; distributed PPJoin + CC rounds above the bounds)",
+    "q202_cluster_representatives": "eager (pair and components kernels, one"
+    " NumPy task each at this size; distributed PPJoin + CC rounds above the bounds)",
+    "q157_entity_resolution": "eager CC stage (one NumPy components-kernel task at"
+    " this size; checkpointed rounds above the bound) + lazy rollup tail",
     # r13: q188 moved from chained global ranks to collected quartile
     # boundaries (operators/rankstats.py) — boundary finding executes
     # at build, the census result is checkpointed.
